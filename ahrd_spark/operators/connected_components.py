@@ -317,15 +317,29 @@ def _cc_iterate(
     return parent.select("node", F.col("comp").alias("component"))
 
 
-def canonical_map(synonym_edges: DataFrame | None, nodes: DataFrame) -> DataFrame:
+def canonical_map(
+    synonym_edges: DataFrame | None, nodes: DataFrame | None = None
+) -> DataFrame:
     """(node, canonical) for every node in ``nodes`` (1 column): the CC
     representative when the node participates in synonym edges, else itself.
     Identity when no edges are given — canonicalization must be a no-op on
-    inputs without synonyms (verified against the reference fixtures)."""
-    n = nodes.toDF("node").distinct()
+    inputs without synonyms (verified against the reference fixtures).
+    ``nodes=None`` maps just the synonym graph's own nodes: a caller that
+    left-joins its entities onto that map and keeps unmatched ids as they
+    are gets the same answer without computing its node set first.
+
+    Dictionary-sized by contract: synonym edges are an ontology's alt_id /
+    merged-id list, so the whole edge list is contracted in ONE partition by
+    the local NumPy pass, which on one partition is the exact answer.  It
+    stays lazy inside the caller's plan — none of ``connected_components``'
+    count / checkpoint jobs.  Pair graphs that grow with the input (near-dup
+    pairs) go through ``connected_components`` instead."""
     if synonym_edges is None:
+        n = nodes.toDF("node").distinct()
         return n.select("node", F.col("node").alias("canonical"))
-    cc = connected_components(synonym_edges)
-    return n.join(cc, "node", "left").select(
-        "node", F.coalesce("component", "node").alias("canonical")
+    cc = _local_components(_canon_edges(synonym_edges), 1)
+    if nodes is None:
+        return cc.select("node", F.col("root").alias("canonical"))
+    return nodes.toDF("node").distinct().join(cc, "node", "left").select(
+        "node", F.coalesce("root", "node").alias("canonical")
     )

@@ -421,11 +421,18 @@ def dedup_canonical(
     to recompute).  Docs in no pair map to themselves.  Downstream keep
     filter: ``result.filter(col("doc_id") == col("canonical_id"))``.
     """
-    from ahrd_spark.operators.connected_components import canonical_map
+    from ahrd_spark.operators.connected_components import connected_components
 
     edges = pairs.select(F.col("doc_a").alias("u"), F.col("doc_b").alias("v"))
-    return canonical_map(edges, df.select(F.col(id_col).alias("obj"))).select(
-        F.col("node").alias(id_col), F.col("canonical").alias("canonical_id")
+    cc = connected_components(edges)
+    return (
+        df.select(F.col(id_col).alias("node"))
+        .distinct()
+        .join(cc, "node", "left")
+        .select(
+            F.col("node").alias(id_col),
+            F.coalesce("component", "node").alias("canonical_id"),
+        )
     )
 
 

@@ -16,6 +16,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ahrd_spark.operators.dictionary import local_frame, transitive_closure
+
 
 def transfer_go(winners: DataFrame, goa: DataFrame) -> DataFrame:
     """(protein_acc, go_terms ARRAY<STRING> sorted) for proteins whose
@@ -28,56 +30,22 @@ def transfer_go(winners: DataFrame, goa: DataFrame) -> DataFrame:
     )
 
 
-def go_dag_closure(
-    edges: DataFrame, max_iter: int = 32, checkpoint_dir: str | None = None
-) -> DataFrame:
+def go_dag_closure(edges: DataFrame) -> DataFrame:
     """Transitive closure of a GO is-a DAG given (child, parent) edges ->
     (go_term, ancestor).  Generalizes the InterPro parent-chain recursion
     (InterproResult.java:198-244) to the GO ontology — the reference
     declares a goDB (AHRD.java:40) but never populates it in this version;
     the engine makes DAG propagation a first-class operator.
 
-    The ontology is dictionary-sized -> iterative self-join on the driver's
-    Spark session, broadcast downstream.  ``checkpoint_dir`` truncates the
-    final lineage to reliable storage (``DataFrame.checkpoint``) for
-    cluster fault tolerance; default localCheckpoint is the fast
-    single-process mode.  Same option contract AND caveats as
-    connected_components: ``setCheckpointDir`` is session-global (share one
-    dir across concurrent callers) and reliable checkpoint files need
-    ``spark.cleaner.referenceTracking.cleanCheckpoints=true`` (or manual
-    cleanup) to be reclaimed."""
-    e = edges.toDF("go_term", "ancestor").filter(
-        F.col("go_term") != F.col("ancestor")
-    ).distinct().cache()
-    closure = e
-    frontier = e
-    cached = [e]
-    for _ in range(max_iter):
-        nxt = (
-            frontier.alias("f")
-            .join(e.alias("e"), F.col("f.ancestor") == F.col("e.go_term"))
-            .select(
-                F.col("f.go_term").alias("go_term"),
-                F.col("e.ancestor").alias("ancestor"),
-            )
-            .distinct()
-            .join(closure, ["go_term", "ancestor"], "left_anti")
-        )
-        nxt = nxt.persist()
-        cached.append(nxt)
-        if nxt.isEmpty():
-            break
-        closure = closure.unionByName(nxt)
-        frontier = nxt
-    # materialize once, release the loop caches (see interpro_closure)
-    if checkpoint_dir:
-        closure.sparkSession.sparkContext.setCheckpointDir(checkpoint_dir)
-        out = closure.checkpoint(eager=True)
-    else:
-        out = closure.localCheckpoint(eager=True)
-    for df in cached:
-        df.unpersist(blocking=False)
-    return out
+    The ontology is dictionary-sized (GO is ~5e4 terms): the edge list is
+    collected once and closed on the driver by the same depth-first search
+    as ``interpro_closure`` (``operators.dictionary``), at any depth.  The
+    result is an Arrow-backed local relation, broadcast downstream
+    without a job.  Self-edges are dropped; (a, a) appears only on a
+    cycle."""
+    e = edges.toDF("go_term", "ancestor")
+    rows = e.filter(F.col("go_term") != F.col("ancestor")).collect()
+    return local_frame(edges.sparkSession, transitive_closure(rows), e.schema)
 
 
 def propagate_go_ancestors(

@@ -9,84 +9,49 @@ golden keeps the roots ipr1/ipr2 and drops all descendants/containees.)
 The reference walks the DAG recursively per pair — O(n^2) per protein with
 repeated DB lookups (its comment admits the cost).  Spark-first design:
 
-1. Precompute the transitive closure of the (small, broadcastable) InterPro
-   DAG ONCE — `closure(ipr_id, superior_id)` where superior is a transitive
-   ancestor-or-container.  The InterPro hierarchy is shallow (< 10 levels)
-   and the dictionary is tiny versus the hits, so closure is an iterative
-   self-join that converges in a handful of rounds.
+1. Close the InterPro DAG ONCE, on the driver, from the entries
+   ``parse_interpro_db`` already parsed there: a depth-first search per
+   entry (``operators.dictionary``), at any depth.  The closure
+   ``(ipr_id, superior_id)`` reaches Spark as an Arrow-backed local
+   relation, so computing it starts no Spark job and broadcasting it
+   starts none either.
 2. The filter is then one broadcast join + left-anti join per protein —
    linear, not quadratic, and fully distributed.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from typing import Iterable
+
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StringType, StructField, StructType
+
+from ahrd_spark.operators.dictionary import local_frame, transitive_closure
+
+CLOSURE_SCHEMA = StructType(
+    [
+        StructField("ipr_id", StringType(), False),
+        StructField("superior_id", StringType(), False),
+    ]
+)
 
 
-def interpro_closure(
-    interpro_db: DataFrame,
-    max_iter: int = 32,
-    checkpoint_dir: str | None = None,
-) -> DataFrame:
+def interpro_closure(spark: SparkSession, entries: Iterable[tuple]) -> DataFrame:
     """closure(ipr_id, superior_id): superior_id is a transitive ancestor
     (via parent_id chain) or transitive container (via contains sets,
     inverted to child->container edges) of ipr_id.
 
-    ``checkpoint_dir`` switches the final lineage truncation to reliable
-    storage (``DataFrame.checkpoint``) so a long-lived cluster job survives
-    executor loss; default localCheckpoint is the fast single-process mode.
-    Same option contract AND same caveats as connected_components:
-    ``setCheckpointDir`` is session-global (concurrent callers should share
-    one dir — files are per-RDD-uuid, so sharing is safe), and reliable
-    checkpoint files are only auto-deleted with
-    ``spark.cleaner.referenceTracking.cleanCheckpoints=true``; otherwise
-    clean the dir after the job."""
-    parent_edges = interpro_db.filter(F.col("parent_id").isNotNull()).select(
-        F.col("ipr_id"), F.col("parent_id").alias("superior_id")
-    )
-    contain_edges = interpro_db.select(
-        F.explode("contains").alias("ipr_id"),
-        F.col("ipr_id").alias("superior_id"),
-    )
-    edges = parent_edges.unionByName(contain_edges).distinct().cache()
-
-    closure = edges
-    frontier = edges
-    cached = [edges]
-    for _ in range(max_iter):
-        # next hop: frontier (a -> b) joined with edges (b -> c) gives a -> c
-        nxt = (
-            frontier.alias("f")
-            .join(
-                edges.alias("e"),
-                F.col("f.superior_id") == F.col("e.ipr_id"),
-            )
-            .select(
-                F.col("f.ipr_id").alias("ipr_id"),
-                F.col("e.superior_id").alias("superior_id"),
-            )
-            .distinct()
-            .join(closure, ["ipr_id", "superior_id"], "left_anti")
-        )
-        nxt = nxt.cache()
-        cached.append(nxt)
-        if nxt.isEmpty():
-            break
-        closure = closure.unionByName(nxt)
-        frontier = nxt
-    # materialize the (dictionary-sized) closure once, then release every
-    # loop cache — a long-lived session must not leak executor memory per
-    # call.  The result's own blocks are freed by the ContextCleaner when
-    # the caller drops the DataFrame.
-    if checkpoint_dir:
-        closure.sparkSession.sparkContext.setCheckpointDir(checkpoint_dir)
-        out = closure.checkpoint(eager=True)
-    else:
-        out = closure.localCheckpoint(eager=True)
-    for df in cached:
-        df.unpersist(blocking=False)
-    return out
+    ``entries``: ``parse_interpro_db`` tuples ``(ipr_id, short_name, name,
+    type, parent_id, contains)``.  (a, a) appears only on a cycle; ids that
+    are only referenced (a parent or containee missing from the DB) still
+    show up."""
+    edges = []
+    for ipr_id, _short, _name, _type, parent_id, contains in entries:
+        if parent_id is not None:
+            edges.append((ipr_id, parent_id))
+        edges.extend((child, ipr_id) for child in contains or ())
+    return local_frame(spark, transitive_closure(edges), CLOSURE_SCHEMA)
 
 
 def filter_most_informative(

@@ -944,7 +944,6 @@ def rdfs_materialize(
     subclass_edges: DataFrame | None = None,
     subprop_edges: DataFrame | None = None,
     type_pred: str = "rdf:type",
-    max_iter: int = 32,
     subj_col: str = "subj",
     pred_col: str = "pred",
     obj_col: str = "obj",
@@ -971,7 +970,7 @@ def rdfs_materialize(
     graphs — ontology-sized, i.e. tiny next to the instance data.
 
     Scale shape: the schema closures run on dictionary-sized inputs
-    (``go_transfer.go_dag_closure``'s iterative self-join) and are
+    (``go_transfer.go_dag_closure``'s driver-side search) and are
     BROADCAST into the two instance-side joins, so the instance table is
     never shuffled by the rules at all — rdfs7 is a broadcast join on the
     predicate column, rdfs9 a broadcast join on the object (class) column
@@ -993,7 +992,7 @@ def rdfs_materialize(
     if subprop_edges is not None:
         prop_cl = F.broadcast(
             go_dag_closure(
-                subprop_edges.toDF("pred", "super_pred"), max_iter=max_iter
+                subprop_edges.toDF("pred", "super_pred")
             ).toDF("pred", "super_pred")
         )
         via_subprop = t.join(prop_cl, "pred").select(
@@ -1006,7 +1005,7 @@ def rdfs_materialize(
     if subclass_edges is not None:
         cls_cl = F.broadcast(
             go_dag_closure(
-                subclass_edges.toDF("obj", "super_cls"), max_iter=max_iter
+                subclass_edges.toDF("obj", "super_cls")
             ).toDF("obj", "super_cls")
         )
         via_subclass = (
@@ -1073,7 +1072,6 @@ def rdfs_delta(
     subclass_edges: DataFrame | None = None,
     subprop_edges: DataFrame | None = None,
     type_pred: str = "rdf:type",
-    max_iter: int = 32,
     subj_col: str = "subj",
     pred_col: str = "pred",
     obj_col: str = "obj",
@@ -1111,7 +1109,6 @@ def rdfs_delta(
         subclass_edges=subclass_edges,
         subprop_edges=subprop_edges,
         type_pred=type_pred,
-        max_iter=max_iter,
         subj_col=subj_col,
         pred_col=pred_col,
         obj_col=obj_col,

@@ -53,7 +53,11 @@ from ahrd_spark.operators.scoring import (
 from ahrd_spark.sources.blast_tabular import read_seq_sim_table
 from ahrd_spark.sources.fasta import read_query_fasta, read_subject_fasta_db
 from ahrd_spark.sources.goa import read_goa
-from ahrd_spark.sources.interpro import read_interpro_db, read_interpro_raw
+from ahrd_spark.sources.interpro import (
+    parse_interpro_db,
+    read_interpro_db,
+    read_interpro_raw,
+)
 
 
 def short_accession_expr(hit_acc, regex: str):
@@ -297,14 +301,15 @@ def run_annotate(spark: SparkSession, cfg: AhrdConfig) -> DataFrame:
     )
 
     if cfg.interpro_database and cfg.interpro_result:
-        ipr_db = read_interpro_db(spark, cfg.interpro_database)
+        entries = parse_interpro_db(cfg.interpro_database)
+        ipr_db = read_interpro_db(spark, cfg.interpro_database, entries)
         ipr_raw = read_interpro_raw(spark, cfg.interpro_result)
         # J5: dictionary lookup — drop hits whose IPR id is unknown (warned
         # in the reference) and attach names
         ipr_hits = ipr_raw.join(
             F.broadcast(ipr_db.select("ipr_id")), "ipr_id", "left_semi"
         )
-        closure = interpro_closure(ipr_db)
+        closure = interpro_closure(spark, entries)
         kept = filter_most_informative(ipr_hits, closure)
         kept = kept.join(F.broadcast(ipr_db.select("ipr_id", "name")), "ipr_id")
         domains = kept.groupBy("protein_acc").agg(

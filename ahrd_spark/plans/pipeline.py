@@ -19,8 +19,14 @@ preserves the scan partitioning (no repartition+sort); link_score reads
 that checkpoint under a whole-file scan and scores groups in place
 (``pre_grouped``); canonicalize is skipped when statically empty; only
 stages whose semantics require co-location (GO preference's has_go join,
-synonym connected components) introduce exchanges, each keyed by
-doc/protein hash.  The span arrays are never rewritten —
+GO transfer's per-protein term sets, the InterPro filter's per-protein
+anti-join) introduce exchanges, each keyed by doc/protein hash.
+canonicalize treats its dictionaries as driver work: the InterPro closure
+and id list are local relations, the synonym map is a one-partition pass
+over the ontology-sized edge list, and all three reach the data-sized side
+as broadcasts, so the stage is one write job plus its AQE query stages.
+Raw InterPro lines are restricted to the batch's doc_ids (J4) before the
+filter.  The span arrays are never rewritten —
 ``span_fingerprint`` equality between input and every checkpoint proves
 the per-row invariant.
 """
@@ -47,7 +53,11 @@ from ahrd_spark.plans.annotate import short_accession_expr
 from ahrd_spark.plans.checkpoint import CheckpointManager
 from ahrd_spark.plans.docs import docs_to_hits
 from ahrd_spark.sources.goa import read_goa
-from ahrd_spark.sources.interpro import read_interpro_db, read_interpro_raw
+from ahrd_spark.sources.interpro import (
+    parse_interpro_db,
+    read_interpro_db,
+    read_interpro_raw,
+)
 
 
 def _grouped_by_regexes(dbs, keyfn):
@@ -521,12 +531,24 @@ def run_pipeline(
             )
             pieces.append(go)
         if cfg.interpro_database and cfg.interpro_result:
-            ipr_db = read_interpro_db(spark, cfg.interpro_database)
-            ipr_raw = read_interpro_raw(spark, cfg.interpro_result)
-            ipr_hits = ipr_raw.join(
-                F.broadcast(ipr_db.select("ipr_id")), "ipr_id", "left_semi"
+            # the DB is parsed once on the driver; its id list and closure
+            # reach the plan as local relations (no job to build either)
+            entries = parse_interpro_db(cfg.interpro_database)
+            ipr_db = read_interpro_db(spark, cfg.interpro_database, entries)
+            # J5: ids the DB knows; J4: proteins of this batch only — the
+            # raw result file may cover more proteins than the docs table
+            ipr_hits = (
+                read_interpro_raw(spark, cfg.interpro_result)
+                .join(F.broadcast(ipr_db.select("ipr_id")), "ipr_id", "left_semi")
+                .join(
+                    docs.select(F.col("doc_id").alias("protein_acc")),
+                    "protein_acc",
+                    "left_semi",
+                )
             )
-            kept = filter_most_informative(ipr_hits, interpro_closure(ipr_db))
+            kept = filter_most_informative(
+                ipr_hits, interpro_closure(spark, entries)
+            )
             pieces.append(
                 kept.select(
                     "protein_acc",
@@ -542,7 +564,11 @@ def run_pipeline(
         ents = pieces[0]
         for p in pieces[1:]:
             ents = ents.unionByName(p)
-        cmap = canonical_map(synonym_edges, ents.select("obj"))
+        if synonym_edges is None:
+            return ents.select("protein_acc", "pred", "obj", "obj_kind")
+        # the map covers the synonym graph's nodes only: an entity outside
+        # it misses the join and keeps its own id
+        cmap = canonical_map(synonym_edges)
         return ents.join(
             F.broadcast(cmap.withColumnRenamed("node", "obj")), "obj", "left"
         ).select(

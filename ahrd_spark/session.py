@@ -13,6 +13,49 @@ import os
 from pyspark.sql import SparkSession
 
 
+# share of the host's (or the container's) memory the driver heap may take
+# by default: the JVM's off-heap use and the Python workers need the rest
+DRIVER_MEMORY_SHARE = 0.4
+DRIVER_MEMORY_MAX_GB = 48
+
+
+def memory_limit_bytes() -> int | None:
+    """The smaller of MemTotal and the cgroup memory limit, or None when
+    neither is readable (non-Linux hosts)."""
+    limits = []
+    try:
+        with open("/proc/meminfo") as fh:
+            for line in fh:
+                if line.startswith("MemTotal:"):
+                    limits.append(int(line.split()[1]) * 1024)
+                    break
+    except OSError:
+        pass
+    for path in (
+        "/sys/fs/cgroup/memory.max",  # cgroup v2
+        "/sys/fs/cgroup/memory/memory.limit_in_bytes",  # cgroup v1
+    ):
+        try:
+            with open(path) as fh:
+                raw = fh.read().strip()
+        except OSError:
+            continue
+        if raw.isdigit():  # v2 writes "max" when unlimited
+            limits.append(int(raw))
+    return min(limits) if limits else None
+
+
+def default_driver_memory() -> str:
+    """``spark.driver.memory`` when ``SPARK_DRIVER_MEMORY`` is unset:
+    ``DRIVER_MEMORY_SHARE`` of the memory limit in whole GB, between 1 and
+    ``DRIVER_MEMORY_MAX_GB`` (the cap when the limit is unknown)."""
+    limit = memory_limit_bytes()
+    if limit is None:
+        return f"{DRIVER_MEMORY_MAX_GB}g"
+    gb = int(limit * DRIVER_MEMORY_SHARE) >> 30
+    return f"{max(1, min(DRIVER_MEMORY_MAX_GB, gb))}g"
+
+
 def get_spark(
     app_name: str = "ahrd_spark",
     master: str | None = None,
@@ -24,7 +67,9 @@ def get_spark(
     ``master`` defaults to ``local[$SPARK_GRAFT_CPUS]`` (driver contract) or
     ``local[*]``.  ``shuffle_partitions`` defaults to the core count so local
     runs don't pay 200-task scheduling overhead; on a real cluster you would
-    leave AQE's coalescing to pick the effective number.
+    leave AQE's coalescing to pick the effective number.  The driver heap
+    is ``SPARK_DRIVER_MEMORY`` when set, else ``default_driver_memory()``,
+    a share of the memory the host (or its cgroup) gives the process.
     """
     if master is None:
         cpus = os.environ.get("SPARK_GRAFT_CPUS", "*")
@@ -56,7 +101,10 @@ def get_spark(
         )
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
         .config("spark.sql.files.maxPartitionBytes", str(128 * 1024 * 1024))
-        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "48g"))
+        .config(
+            "spark.driver.memory",
+            os.environ.get("SPARK_DRIVER_MEMORY") or default_driver_memory(),
+        )
         .config("spark.ui.enabled", "false")
         .config("spark.sql.session.timeZone", "UTC")
     )

@@ -5,8 +5,8 @@ Parity:
   attributes id/short_name/type, child <name>, first parent_list/rel_ref
   @ipr_ref as parent, all contains/rel_ref @ipr_ref as contains-set.
   The dictionary is small (tens of MB for the full InterPro release), so we
-  parse it driver-side with the stdlib and broadcast the resulting
-  DataFrame — the idiomatic Spark treatment of a dimension dictionary.
+  parse it driver-side with the stdlib and hand Spark an Arrow-backed local
+  relation — the idiomatic Spark treatment of a dimension dictionary.
 - A7 raw results   InterproResult.java:126-162 — per line, Java regex
   ``(\\S+)\\s+.*\\s(IPR\\d{6})\\s.*`` with Matcher.matches() (whole line);
   distributed text scan + regexp_extract.
@@ -25,6 +25,8 @@ from pyspark.sql.types import (
     StructType,
 )
 
+from ahrd_spark.operators.dictionary import local_frame
+
 INTERPRO_DB_SCHEMA = StructType(
     [
         StructField("ipr_id", StringType(), False),
@@ -40,8 +42,10 @@ INTERPRO_DB_SCHEMA = StructType(
 INTERPRO_RAW_REGEX = r"^(?:(\S+)\s+.*\s(IPR\d{6})\s.*)$"
 
 
-def read_interpro_db(spark: SparkSession, path: str) -> DataFrame:
-    """interpro_db(ipr_id, short_name, name, type, parent_id, contains)."""
+def parse_interpro_db(path: str) -> list[tuple]:
+    """The XML DB as ``INTERPRO_DB_SCHEMA`` tuples ``(ipr_id, short_name,
+    name, type, parent_id, contains)``, parsed on the driver with the
+    stdlib — the form ``interpro_closure`` closes."""
     rows = []
     tree = ET.parse(path)
     for el in tree.getroot().iter("interpro"):
@@ -68,7 +72,19 @@ def read_interpro_db(spark: SparkSession, path: str) -> DataFrame:
                 contains,
             )
         )
-    return spark.createDataFrame(rows, INTERPRO_DB_SCHEMA)
+    return rows
+
+
+def read_interpro_db(
+    spark: SparkSession, path: str, entries: list[tuple] | None = None
+) -> DataFrame:
+    """interpro_db(ipr_id, short_name, name, type, parent_id, contains) as
+    an Arrow-backed local relation (no job to build or broadcast it).
+    ``entries``: ``parse_interpro_db(path)`` when the caller already holds
+    it, so the XML is parsed once."""
+    if entries is None:
+        entries = parse_interpro_db(path)
+    return local_frame(spark, entries, INTERPRO_DB_SCHEMA)
 
 
 def read_interpro_raw(spark: SparkSession, path: str) -> DataFrame:

@@ -42,9 +42,8 @@ def test_propagate_go_ancestors(spark):
 
 def test_closure_loops_release_their_caches(spark):
     """Long-lived sessions must not leak executor memory per closure call:
-    repeated closure computations leave no extra persisted RDDs behind
-    (each call's result keeps at most its own materialized blocks, freed
-    when the reference is dropped)."""
+    both closures are computed on the driver and come back as local
+    relations, so repeated calls retain no persisted RDD at all."""
     import gc
 
     from ahrd_spark.operators.interpro_filter import interpro_closure
@@ -52,10 +51,11 @@ def test_closure_loops_release_their_caches(spark):
     edges = spark.createDataFrame(
         [("GO:a", "GO:b"), ("GO:b", "GO:c")], "child string, parent string"
     )
-    ipr_db = spark.createDataFrame(
-        [("ipr1", None, []), ("ipr2", "ipr1", ["ipr3"]), ("ipr3", None, [])],
-        "ipr_id string, parent_id string, contains array<string>",
-    )
+    entries = [
+        ("ipr1", None, None, None, None, []),
+        ("ipr2", None, None, None, "ipr1", ["ipr3"]),
+        ("ipr3", None, None, None, None, []),
+    ]
 
     def retained():
         gc.collect()
@@ -64,55 +64,12 @@ def test_closure_loops_release_their_caches(spark):
 
     # warm one call of each, drop results
     go_dag_closure(edges).count()
-    interpro_closure(ipr_db).count()
+    interpro_closure(spark, entries).count()
     base = retained()
     for _ in range(3):
         go_dag_closure(edges).count()
-        interpro_closure(ipr_db).count()
-    # loop caches released: repeated calls add nothing beyond transient
-    # result blocks the ContextCleaner is still draining
-    assert retained() <= base + 2
-
-
-def test_closures_reliable_checkpoint_mode(spark, tmp_path):
-    """checkpoint_dir switches both closure loops' final lineage truncation
-    to reliable storage: same closure rows, and checkpoint files actually
-    land in the directory (the mode a real cluster needs)."""
-    import os
-
-    from ahrd_spark.operators.interpro_filter import interpro_closure
-
-    edges = spark.createDataFrame(
-        [("GO:a", "GO:b"), ("GO:b", "GO:c")], "child string, parent string"
-    )
-    base = {(r["go_term"], r["ancestor"]) for r in go_dag_closure(edges).collect()}
-    godir = str(tmp_path / "go_ckpt")
-    got = {
-        (r["go_term"], r["ancestor"])
-        for r in go_dag_closure(edges, checkpoint_dir=godir).collect()
-    }
-    assert got == base
-
-    ipr_db = spark.createDataFrame(
-        [("IPR2", "IPR1", []), ("IPR3", "IPR2", []), ("IPR1", None, [])],
-        "ipr_id string, parent_id string, contains array<string>",
-    )
-    iprdir = str(tmp_path / "ipr_ckpt")
-    base_i = {
-        (r["ipr_id"], r["superior_id"])
-        for r in interpro_closure(ipr_db).collect()
-    }
-    got_i = {
-        (r["ipr_id"], r["superior_id"])
-        for r in interpro_closure(ipr_db, checkpoint_dir=iprdir).collect()
-    }
-    assert got_i == base_i
-
-    for d in (godir, iprdir):
-        found = []
-        for root, _dirs, files in os.walk(d):
-            found += files
-        assert found, f"no reliable checkpoint files written under {d}"
+        interpro_closure(spark, entries).count()
+    assert retained() <= base
 
 
 def test_no_broadcast_hint_on_data_sized_frames():

@@ -7,11 +7,10 @@ from ahrd_spark.operators.interpro_filter import (
     filter_most_informative,
     interpro_closure,
 )
-from ahrd_spark.sources.interpro import INTERPRO_DB_SCHEMA
 
 
-def _db(spark):
-    rows = [
+def _entries():
+    return [
         ("IPR:000001", None, None, "domain", None, []),
         ("IPR:000002", None, None, "domain", None, ["IPR:000005", "IPR:000006"]),
         ("IPR:000003", None, None, "domain", "IPR:000001", []),
@@ -20,11 +19,10 @@ def _db(spark):
         ("IPR:000006", None, None, "domain", None, ["IPR:000007"]),
         ("IPR:000007", None, None, "domain", None, []),
     ]
-    return spark.createDataFrame(rows, INTERPRO_DB_SCHEMA)
 
 
 def test_closure(spark):
-    closure = interpro_closure(_db(spark))
+    closure = interpro_closure(spark, _entries())
     got = {(r["ipr_id"], r["superior_id"]) for r in closure.collect()}
     assert ("IPR:000003", "IPR:000001") in got  # direct parent
     assert ("IPR:000004", "IPR:000001") in got  # grandparent
@@ -38,7 +36,7 @@ def test_filter_most_informative_golden(spark):
         [("P", f"IPR:00000{i}") for i in range(1, 8)],
         "protein_acc string, ipr_id string",
     )
-    kept = filter_most_informative(domains, interpro_closure(_db(spark)))
+    kept = filter_most_informative(domains, interpro_closure(spark, _entries()))
     got = {r["ipr_id"] for r in kept.collect()}
     assert got == {"IPR:000001", "IPR:000002"}
 
@@ -49,6 +47,6 @@ def test_filter_keeps_unrelated(spark):
         [("Q", "IPR:000004"), ("Q", "IPR:000007")],
         "protein_acc string, ipr_id string",
     )
-    kept = filter_most_informative(domains, interpro_closure(_db(spark)))
+    kept = filter_most_informative(domains, interpro_closure(spark, _entries()))
     got = {r["ipr_id"] for r in kept.collect()}
     assert got == {"IPR:000004", "IPR:000007"}
