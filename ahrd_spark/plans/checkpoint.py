@@ -14,8 +14,8 @@ run through ``DataFrameWriterV2``):
 - stage output dir:   <workdir>/<stage>/data   (parquet, partitioned writes)
 - lineage sidecar:    <workdir>/<stage>/_lineage.json
     {stage, config_hash, inputs: [upstream stage fingerprints],
-     partitions: [{partition_id, file, rows}], total_rows, checksum,
-     written_at_ms}
+     partitions: [{partition_id, file, rows, bytes}], total_rows, checksum,
+     fingerprint, schema, written_at_ms}
 - completion marker:  parquet _SUCCESS + the sidecar itself
 
 Metrics cost nothing extra: the global xor-fold checksum rides on the write
@@ -23,9 +23,18 @@ job via ``Observation`` (no second data pass) and per-partition row counts
 come from the parquet file footers (one file per hash partition).
 
 Exact resume: a stage is skipped iff its sidecar exists AND its config_hash
-matches AND every upstream fingerprint matches.  Determinism: outputs are
-hash-repartitioned by the stage key and sorted within partitions before the
-write, so a resumed run re-reads exactly what a cold run would produce.
+matches AND every upstream fingerprint matches.  Every re-read (right after
+the write, or on resume) passes the recorded schema, so reading a
+checkpoint starts no schema-inference job.
+
+Determinism: by default outputs are hash-repartitioned by the stage key and
+sorted within partitions before the write.  A stage whose plan already
+keeps each key group inside one partition, contiguous, writes its natural
+layout instead (``preserve_partitioning``): mention_detect (a per-doc
+explode), link_score on the pre-grouped path (one winner per protein,
+emitted in the task that read the protein's mentions) and materialize
+without canonicalize (a projection of the winners).  Either way a resumed
+run re-reads exactly what a cold run would produce.
 """
 
 from __future__ import annotations
@@ -36,6 +45,7 @@ import time
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 
 import contextlib
@@ -218,6 +228,10 @@ class CheckpointManager:
                 F.xxhash64(F.col(sort_keys[0])), *sort_keys
             )
         path = self._data_dir(stage)
+        # the schema as written, so every re-read skips schema inference (a
+        # Spark job per read); parquet sources force it nullable, exactly as
+        # inference would
+        schema = out.schema
         # checksum piggybacks on the write job itself (Observation) — no
         # second full-data pass; xor-fold of xxhash64 over EVERY column is
         # order-independent, overflow-free, and covers non-key values (a
@@ -251,12 +265,13 @@ class CheckpointManager:
             "total_rows": int(metrics.get("rows") or 0),
             "checksum": checksum,
             "fingerprint": fingerprint,
+            "schema": schema.jsonValue(),
             "written_at_ms": int(time.time() * 1000),
         }
         payload = json.dumps(lineage, indent=1).encode()
         with self.fs.open_output_stream(self._fs_sidecar(stage)) as fh:
             fh.write(payload)
-        return self.spark.read.parquet(path)
+        return self.spark.read.schema(schema).parquet(path)
 
     def _partition_metrics(self, fs_path: str) -> list[dict]:
         import posixpath as pp
@@ -299,7 +314,13 @@ class CheckpointManager:
         return int(max(sizes))
 
     def read(self, stage: str) -> DataFrame:
-        return self.spark.read.parquet(self._data_dir(stage))
+        """The stage's checkpoint, read with the schema its sidecar recorded
+        (no inference job); sidecars without one fall back to inference."""
+        lin = self.lineage(stage) or {}
+        reader = self.spark.read
+        if "schema" in lin:
+            reader = reader.schema(StructType.fromJson(lin["schema"]))
+        return reader.parquet(self._data_dir(stage))
 
     def run_stage(
         self,

@@ -12,15 +12,22 @@ Stages (each checkpointed with lineage + metrics, resumable exactly):
 4. ``materialize``     emit the triples graph table
    (subj, pred, obj, obj_kind, score, src_db, src_hit).
 
-Partitioning story (round 3): the hot path is SHUFFLE-FREE end-to-end.
-The docs table's contract is one row per doc_id, so mention_detect (a
-map+explode) emits every protein's rows contiguously and its checkpoint
-preserves the scan partitioning (no repartition+sort); link_score reads
-that checkpoint under a whole-file scan and scores groups in place
-(``pre_grouped``); canonicalize is skipped when statically empty; only
-stages whose semantics require co-location (GO preference's has_go join,
-GO transfer's per-protein term sets, the InterPro filter's per-protein
-anti-join) introduce exchanges, each keyed by doc/protein hash.
+Partitioning story: the hot path is SHUFFLE-FREE end-to-end, one Spark
+job per stage.  The docs table's contract is one row per doc_id, so
+mention_detect (a map+explode) emits every protein's rows contiguously and
+its checkpoint preserves the scan partitioning (no repartition+sort);
+link_score reads that checkpoint under a whole-file scan, scores groups in
+place (``pre_grouped``) and writes the one winner per protein where it was
+scored; without canonicalize, materialize projects the winners and keeps
+their layout too.  Only stages whose semantics require co-location (GO
+preference's has_go join, GO transfer's per-protein term sets, the
+InterPro filter's per-protein anti-join, materialize's entity union)
+introduce exchanges, each keyed by doc/protein hash.  Every checkpoint is
+re-read with its recorded schema (no inference job), and
+``detect_mentions``' expression tree is built once per session, so a warm
+call spends no driver time rebuilding plans.  Without GO preference, GOA
+is semi-joined to the winners' accessions only (the data-induced
+predicate of VLDB'19 "Pushing Data-Induced Predicates Through Joins").
 canonicalize treats its dictionaries as driver work: the InterPro closure
 and id list are local relations, the synonym map is a one-partition pass
 over the ontology-sized edge list, and all three reach the data-sized side
@@ -33,7 +40,10 @@ the per-row invariant.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+import weakref
+from typing import NamedTuple
+
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ahrd_spark.config import AhrdConfig
@@ -51,7 +61,7 @@ from ahrd_spark.operators.interpro_filter import (
 )
 from ahrd_spark.plans.annotate import short_accession_expr
 from ahrd_spark.plans.checkpoint import CheckpointManager
-from ahrd_spark.plans.docs import docs_to_hits
+from ahrd_spark.plans.docs import docs_to_hits, query_length_expr
 from ahrd_spark.sources.goa import read_goa
 from ahrd_spark.sources.interpro import (
     parse_interpro_db,
@@ -186,7 +196,54 @@ def detect_mentions(docs: DataFrame, cfg: AhrdConfig) -> DataFrame:
     pipeline drops ``tokens`` for the slim checkpoint, Catalyst prunes the
     whole tokenize out of the stage (measured ~25% off mention-detect), and
     both are evaluated only for surviving rows.
+
+    The tree depends on ``cfg`` alone, so it is built once per session
+    (``mention_plan``); a warm call only applies the memoized Columns to
+    ``docs``.
     """
+    p = mention_plan(docs.sparkSession, cfg)
+    # qlen joins before the explode's select, so it stays beneath the
+    # Generate: once per doc, not once per span
+    return (
+        docs.withColumn("qlen", p.qlen)
+        .select(*p.exploded)
+        .filter(p.gate)
+        .select(*p.out)
+    )
+
+
+class MentionPlan(NamedTuple):
+    """The ``cfg``-only Columns of ``detect_mentions``."""
+
+    qlen: Column  # per-doc query length, added before the explode
+    exploded: tuple  # select list: protein_acc, qlen, one hit struct ``h``
+    gate: Column  # C2/C3/C5 predicate over ``h``
+    out: tuple  # output select list
+
+
+# Built plans per SparkSession object.  Weak keys tie each entry to the
+# session's lifetime: a dropped session takes its Columns with it, where an
+# id()-keyed cache could hand a new session a dead one's entry.
+_MENTION_PLANS: weakref.WeakKeyDictionary = weakref.WeakKeyDictionary()
+
+
+def mention_plan(spark: SparkSession, cfg: AhrdConfig) -> MentionPlan:
+    """``_build_mention_plan(cfg)``, built once per session and per value of
+    every ``blast_dbs`` field the builder reads."""
+    plans = _MENTION_PLANS.setdefault(spark, {})
+    key = tuple(
+        (d.name, d.blacklist, d.filter, d.token_blacklist, d.short_accession_regex)
+        for d in cfg.blast_dbs
+    )
+    if key not in plans:
+        plans[key] = _build_mention_plan(cfg)
+    return plans[key]
+
+
+def _build_mention_plan(cfg: AhrdConfig) -> MentionPlan:
+    """Build ``detect_mentions``' expression tree for ``cfg``.  Pure Python
+    over py4j (about 0.3 s for three dbs): callers go through the
+    per-session memo ``mention_plan``."""
     db_of = lambda s: F.substring_index(s["kind"], ":", -1)  # noqa: E731
 
     def branch(groups, mkexpr, default, dbcol):
@@ -251,24 +308,14 @@ def detect_mentions(docs: DataFrame, cfg: AhrdConfig) -> DataFrame:
 
     t2 = F.transform(t1, t2_fields)
 
-    from ahrd_spark.plans.docs import query_length_expr
-
     h = F.col("h")
-    exploded = (
-        docs.withColumn("qlen", query_length_expr())
-        .select(
-            F.col("doc_id").alias("protein_acc"),
-            "qlen",
-            F.explode(t2).alias("h"),
-        )
-    )
     has_tok = branch(
         ft_groups,
         lambda key: has_token_expr(h["description"], key[1]),
         F.lit(False),
         h["db"],
     )
-    gated = exploded.filter(
+    gate = (
         (h["hit_acc"] != "")
         & h["bit_score"].isNotNull()
         & h["description"].isNotNull()
@@ -300,24 +347,33 @@ def detect_mentions(docs: DataFrame, cfg: AhrdConfig) -> DataFrame:
         h["hit_acc"],
         h["db"],
     )
-    # column order matches gate_candidates_multi(docs_to_hits(...)) exactly
-    return gated.select(
-        "protein_acc",
-        "qlen",
-        h["db"].alias("db"),
-        h["hit_acc"].alias("hit_acc"),
-        h["q_start"].alias("q_start"),
-        h["q_end"].alias("q_end"),
-        h["s_start"].alias("s_start"),
-        h["s_end"].alias("s_end"),
-        h["e_value"].alias("e_value"),
-        h["bit_score"].alias("bit_score"),
-        h["s_len"].alias("s_len"),
-        h["description"].alias("description"),
-        h["line_no"].alias("line_no"),
-        h["media_ref"].alias("media_ref"),
-        tokens.alias("tokens"),
-        short.alias("short_acc"),
+    return MentionPlan(
+        qlen=query_length_expr(),
+        exploded=(
+            F.col("doc_id").alias("protein_acc"),
+            "qlen",
+            F.explode(t2).alias("h"),
+        ),
+        gate=gate,
+        # column order matches gate_candidates_multi(docs_to_hits(...))
+        out=(
+            "protein_acc",
+            "qlen",
+            h["db"].alias("db"),
+            h["hit_acc"].alias("hit_acc"),
+            h["q_start"].alias("q_start"),
+            h["q_end"].alias("q_end"),
+            h["s_start"].alias("s_start"),
+            h["s_end"].alias("s_end"),
+            h["e_value"].alias("e_value"),
+            h["bit_score"].alias("bit_score"),
+            h["s_len"].alias("s_len"),
+            h["description"].alias("description"),
+            h["line_no"].alias("line_no"),
+            h["media_ref"].alias("media_ref"),
+            tokens.alias("tokens"),
+            short.alias("short_acc"),
+        ),
     )
 
 
@@ -386,11 +442,7 @@ def run_pipeline(
     )
 
     # -- stage 1: mention-detect --------------------------------------
-    # AHRD_KEEP_TOKENS=1 restores the pre-slim checkpoint layout (A/B knob;
-    # see BASELINE.md round-3 continuation for the measurement)
     import os as _os
-
-    slim_tokens = _os.environ.get("AHRD_KEEP_TOKENS") != "1"
 
     def build_mentions():
         # media_ref stays in the docs table (span invariant) but is consumed
@@ -415,7 +467,7 @@ def run_pipeline(
         # scaling ratio (3.29x -> 2.87x, BASELINE.md round-3) — keep the
         # all-JVM codegen path as the default, and the Arrow path as the
         # measured alternative for clusters with headroom per executor.
-        if slim_tokens and _os.environ.get("AHRD_ARROW_SHRED") == "1":
+        if _os.environ.get("AHRD_ARROW_SHRED") == "1":
             from ahrd_spark.plans.mention_arrow import (
                 detect_mentions_arrow,
                 re2_compatible,
@@ -423,8 +475,7 @@ def run_pipeline(
 
             if re2_compatible(cfg):
                 return detect_mentions_arrow(docs, cfg)
-        dropped = ["media_ref"] + (["tokens"] if slim_tokens else [])
-        return detect_mentions(docs, cfg).drop(*dropped)
+        return detect_mentions(docs, cfg).drop("media_ref", "tokens")
 
     # preserve_partitioning: detect_mentions is a per-row map+explode over
     # the docs table, whose contract is one row per doc_id — so every
@@ -444,8 +495,12 @@ def run_pipeline(
     ))
 
     # -- stage 2: link-score ------------------------------------------
+    # GO preference needs the GOA flag of every candidate, so its GOA set
+    # is semi-joined to all mentions' accessions; otherwise GOA only feeds
+    # transfer_go, which reads it after link_score (see below)
+    prefer_go = cfg.prefer_reference_with_go_annos and cfg.has_go
     goa = None
-    if cfg.has_go:
+    if prefer_go:
         goa = read_goa(
             spark,
             cfg.gene_ontology_result,
@@ -453,30 +508,24 @@ def run_pipeline(
             short_accessions=mentions.select("short_acc"),
         )
 
-    # grouped fast path: the mention checkpoint is hash-partitioned by
-    # protein_acc with one file per partition, so under a whole-file scan
-    # every protein's rows are already contiguous — the scorer can skip its
-    # own repartition+sort (the job's second shuffle of the widest table).
-    # Requires no GO-preference join (it would re-plan the distribution)
-    # and a sidecar that recorded file sizes (older checkpoints fall back).
-    prefer_go = cfg.prefer_reference_with_go_annos and goa is not None
+    # grouped fast path: every protein's mention rows sit contiguously in
+    # one part-file of the mention checkpoint, so under a whole-file scan
+    # the scorer can skip its own repartition+sort (the job's second
+    # shuffle of the widest table).  Requires no GO-preference join (it
+    # would re-plan the distribution) and a sidecar that recorded file
+    # sizes (older checkpoints fall back).
     mention_max_bytes = ckpt.max_partition_bytes("mention_detect")
     grouped = not prefer_go and mention_max_bytes is not None
 
     def build_winners():
         from ahrd_spark.operators.scoring_batch import select_winners_batch
 
-        scorer_in = (
-            mentions.withColumn("tokens", tokens_recompute_expr(cfg))
-            if slim_tokens
-            else mentions
-        )
         # GO preference stays relational: the GOA accession set joins onto
         # the mention rows as a boolean column inside select_winners_batch
         # (never a driver-side collect — at reference-GOA scale that set is
         # 10^7..10^9 accessions)
         return select_winners_batch(
-            scorer_in,
+            mentions.withColumn("tokens", tokens_recompute_expr(cfg)),
             cfg.db_weights,
             cfg.dsbs_weights,
             (
@@ -495,10 +544,13 @@ def run_pipeline(
         )
 
     def run_link_stage():
+        # grouped: the scorer emits each protein's one winner inside the
+        # task that read the protein's mention file, so the output already
+        # meets the checkpoint contract and is written as it comes
         run = lambda: ckpt.run_stage(  # noqa: E731
             "link_score", build_winners, key="protein_acc",
             inputs=["mention_detect"], num_partitions=num_partitions,
-            sort_keys=["protein_acc"],
+            sort_keys=["protein_acc"], preserve_partitioning=grouped,
         )
         if grouped:
             from ahrd_spark.plans.checkpoint import whole_file_scan
@@ -509,13 +561,25 @@ def run_pipeline(
 
     winners = _timed("link_score", run_link_stage)
 
+    # data-induced predicate (VLDB'19 "Pushing Data-Induced Predicates
+    # Through Joins"): transfer_go joins only the winners, so only their
+    # accessions need to probe GOA — one per protein instead of every
+    # mention's
+    if cfg.has_go and goa is None:
+        goa = read_goa(
+            spark,
+            cfg.gene_ontology_result,
+            cfg.reference_go_regex,
+            short_accessions=winners.select("short_acc"),
+        )
+
     # -- stage 3: canonicalize ----------------------------------------
     # statically-empty fast path: with no GOA, no InterPro, and no synonym
     # edges the stage is provably empty — running a checkpoint job (write +
     # sidecar + re-read) for zero rows is pure fixed cost that also drags
     # measured scaling (it does not shrink with parallelism)
     has_canonical = (
-        goa is not None
+        cfg.has_go
         or bool(cfg.interpro_database and cfg.interpro_result)
         or synonym_edges is not None
     )
@@ -610,8 +674,12 @@ def run_pipeline(
         return dt.unionByName(ent_triples)
 
     mat_inputs = ["link_score", "canonicalize"] if has_canonical else ["link_score"]
+    # without canonicalize the triples are a projection of the winners, one
+    # row per protein, so the winners' layout already meets the contract;
+    # the entity union needs the exchange to co-locate a protein's triples
     return _timed("materialize", lambda: ckpt.run_stage(
         "materialize", build_triples, key="subj",
         inputs=mat_inputs, num_partitions=num_partitions,
         sort_keys=["subj", "pred", "obj"],
+        preserve_partitioning=not has_canonical,
     ))
