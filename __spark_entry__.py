@@ -382,10 +382,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         )
         from ahrd_spark.operators.go_transfer import transfer_go
 
-        out = transfer_go(winners, goa)
-        return out.select(
-            "protein_acc", F.explode("go_terms").alias("go_term")
-        )
+        return transfer_go(winners, goa)
 
     q["go_transfer"] = go_transfer
 
@@ -2956,14 +2953,23 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
                 ),
             )
         )
-        domains = nat_dom.unionByName(reg_dom).distinct()
-        closure = nation.select(
+        domains = nat_dom.unionByName(reg_dom)
+        closure = nation.groupBy(
             F.concat(F.lit("n"), F.col("n_nationkey").cast("string")).alias("ipr_id"),
-            F.concat(F.lit("r"), F.col("n_regionkey").cast("string")).alias(
-                "superior_id"
-            ),
+        ).agg(
+            F.collect_list(
+                F.concat(F.lit("r"), F.col("n_regionkey").cast("string"))
+            ).alias("superiors")
         )
-        return filter_most_informative(domains, closure)
+        # a region id has no superiors: [] (a root), not NULL (not a domain)
+        rows = domains.join(closure, "ipr_id", "left").select(
+            "protein_acc",
+            F.col("ipr_id").alias("entity"),
+            F.coalesce("superiors", F.array().cast("array<string>")).alias("superiors"),
+        )
+        return filter_most_informative(rows, "x.entity").select(
+            "protein_acc", F.explode("entities").alias("ipr_id")
+        )
 
     q["most_informative_domains"] = most_informative_domains
 

@@ -20,4 +20,4 @@ declarative Spark DataFrame plans (Catalyst-optimized, whole-stage codegen):
 Everything is built on public PySpark APIs only.
 """
 
-__version__ = "0.4.0"
+__version__ = "0.5.0"

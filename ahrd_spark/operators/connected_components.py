@@ -15,6 +15,9 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructField, StructType
+
+from ahrd_spark.operators.dictionary import components, local_frame
 
 
 def _unpersist_ckpt(df: DataFrame) -> None:
@@ -321,25 +324,34 @@ def canonical_map(
     synonym_edges: DataFrame | None, nodes: DataFrame | None = None
 ) -> DataFrame:
     """(node, canonical) for every node in ``nodes`` (1 column): the CC
-    representative when the node participates in synonym edges, else itself.
-    Identity when no edges are given — canonicalization must be a no-op on
-    inputs without synonyms (verified against the reference fixtures).
-    ``nodes=None`` maps just the synonym graph's own nodes: a caller that
-    left-joins its entities onto that map and keeps unmatched ids as they
-    are gets the same answer without computing its node set first.
+    representative (smallest node of its component) when the node
+    participates in synonym edges, else itself.  Identity when no edges are
+    given — canonicalization must be a no-op on inputs without synonyms
+    (verified against the reference fixtures).  ``nodes=None`` maps just
+    the synonym graph's own nodes: a caller that left-joins its entities
+    onto that map and keeps unmatched ids as they are gets the same answer
+    without computing its node set first.
 
     Dictionary-sized by contract: synonym edges are an ontology's alt_id /
-    merged-id list, so the whole edge list is contracted in ONE partition by
-    the local NumPy pass, which on one partition is the exact answer.  It
-    stays lazy inside the caller's plan — none of ``connected_components``'
-    count / checkpoint jobs.  Pair graphs that grow with the input (near-dup
-    pairs) go through ``connected_components`` instead."""
+    merged-id list, so the edge list is collected once (one job) and
+    union-found on the driver (``operators.dictionary.components``); the
+    map comes back as an Arrow-backed local relation, ready to broadcast.
+    Pair graphs that grow with the input (near-dup pairs) go through
+    ``connected_components`` instead."""
     if synonym_edges is None:
         n = nodes.toDF("node").distinct()
         return n.select("node", F.col("node").alias("canonical"))
-    cc = _local_components(_canon_edges(synonym_edges), 1)
+    node_type = synonym_edges.schema[0].dataType
+    schema = StructType([
+        StructField("node", node_type, False),
+        StructField("canonical", node_type, False),
+    ])
+    # a plain collect: a null filter in the plan costs more than the rows
+    edges = [(u, v) for u, v in synonym_edges.collect()
+             if u is not None and v is not None]
+    cmap = local_frame(synonym_edges.sparkSession, components(edges), schema)
     if nodes is None:
-        return cc.select("node", F.col("root").alias("canonical"))
-    return nodes.toDF("node").distinct().join(cc, "node", "left").select(
-        "node", F.coalesce("root", "node").alias("canonical")
+        return cmap
+    return nodes.toDF("node").distinct().join(F.broadcast(cmap), "node", "left").select(
+        "node", F.coalesce("canonical", "node").alias("canonical")
     )

@@ -1,12 +1,14 @@
 """Dictionary-sized relations, computed on the driver.
 
 Ontology hierarchies (the InterPro DB, GO's is-a DAG, RDFS schema graphs)
-are tiny next to the hits: tens of thousands of entries at full release
-size.  A Spark self-join would close them at a few jobs per level, with a
-plan that grows every round.  A plain depth-first search on the driver
-closes them at any depth, and the result reaches Spark as an Arrow-backed
-local relation: building it, and broadcasting it into a join, starts no
-Spark job.
+and synonym lists are tiny next to the hits: tens of thousands of entries
+at full release size.  A Spark self-join would close them at a few jobs per
+level, with a plan that grows every round.  A plain depth-first search (or
+union-find) on the driver answers them at any depth, and the result reaches
+Spark as an Arrow-backed local relation: building it starts no Spark job.
+Broadcasting one into a join does start one, a small ``LocalTableScan`` →
+``BroadcastExchange`` job (one per broadcast, tens of ms), so a plan should
+broadcast each dictionary once.
 """
 
 from __future__ import annotations
@@ -42,10 +44,34 @@ def transitive_closure(
     return pairs
 
 
+def components(
+    edges: Iterable[tuple[Hashable, Hashable]],
+) -> list[tuple[Hashable, Hashable]]:
+    """(node, root) for every node of an undirected edge list, root = the
+    smallest node of its connected component (union-find).  Self-loops
+    still name their node.  Sorted, so equal inputs give equal frames."""
+    parent: dict = {}
+
+    def find(x):
+        parent.setdefault(x, x)
+        while parent[x] != x:
+            parent[x] = parent[parent[x]]
+            x = parent[x]
+        return x
+
+    for a, b in edges:
+        ra, rb = find(a), find(b)
+        if ra != rb:
+            lo, hi = (ra, rb) if ra < rb else (rb, ra)
+            parent[hi] = lo
+    return sorted((node, find(node)) for node in parent)
+
+
 def local_frame(spark: SparkSession, rows: list[tuple], schema: StructType) -> DataFrame:
     """``rows`` as an Arrow-backed local relation.  Unlike a frame built
     from Python rows (a parallelized RDD read through a Python worker), it
-    plans as a ``LocalTableScan``: no job to build, none to broadcast."""
+    plans as a ``LocalTableScan``: building it starts no job, and a
+    broadcast of it is one small job with no Python worker."""
     import pyarrow as pa
     from pyspark.sql.pandas.types import to_arrow_schema
 
@@ -55,4 +81,3 @@ def local_frame(spark: SparkSession, rows: list[tuple], schema: StructType) -> D
         {n: list(c) for n, c in zip(names, cols)}, schema=to_arrow_schema(schema)
     )
     return spark.createDataFrame(table, schema)
-

@@ -20,13 +20,10 @@ from ahrd_spark.operators.dictionary import local_frame, transitive_closure
 
 
 def transfer_go(winners: DataFrame, goa: DataFrame) -> DataFrame:
-    """(protein_acc, go_terms ARRAY<STRING> sorted) for proteins whose
-    winning hit has reference GO annotations."""
-    return (
-        winners.select("protein_acc", "short_acc")
-        .join(goa, "short_acc")
-        .groupBy("protein_acc")
-        .agg(F.array_sort(F.collect_set("go_term")).alias("go_terms"))
+    """(protein_acc, go_term): one row per GOA row of the protein's winning
+    hit — a GO term annotated twice comes out twice."""
+    return winners.select("protein_acc", "short_acc").join(goa, "short_acc").select(
+        "protein_acc", "go_term"
     )
 
 
@@ -40,9 +37,9 @@ def go_dag_closure(edges: DataFrame) -> DataFrame:
     The ontology is dictionary-sized (GO is ~5e4 terms): the edge list is
     collected once and closed on the driver by the same depth-first search
     as ``interpro_closure`` (``operators.dictionary``), at any depth.  The
-    result is an Arrow-backed local relation, broadcast downstream
-    without a job.  Self-edges are dropped; (a, a) appears only on a
-    cycle."""
+    result is an Arrow-backed local relation: no job to build it, one
+    small job per broadcast of it.  Self-edges are dropped; (a, a) appears
+    only on a cycle."""
     e = edges.toDF("go_term", "ancestor")
     rows = e.filter(F.col("go_term") != F.col("ancestor")).collect()
     return local_frame(edges.sparkSession, transitive_closure(rows), e.schema)

@@ -11,70 +11,71 @@ repeated DB lookups (its comment admits the cost).  Spark-first design:
 
 1. Close the InterPro DAG ONCE, on the driver, from the entries
    ``parse_interpro_db`` already parsed there: a depth-first search per
-   entry (``operators.dictionary``), at any depth.  The closure
-   ``(ipr_id, superior_id)`` reaches Spark as an Arrow-backed local
-   relation, so computing it starts no Spark job and broadcasting it
-   starts none either.
-2. The filter is then one broadcast join + left-anti join per protein —
-   linear, not quadratic, and fully distributed.
+   entry (``operators.dictionary``), at any depth.  ``read_interpro_db``
+   carries each known id's superiors as an array column of its local
+   relation, so one broadcast join both drops unknown ids (J5) and
+   attaches the closure.
+2. The filter is then one ``groupBy(protein_acc)`` and an array expression
+   per protein: no self-join, and no exchange beyond the grouping.
 """
 
 from __future__ import annotations
 
 from typing import Iterable
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql.types import StringType, StructField, StructType
 
-from ahrd_spark.operators.dictionary import local_frame, transitive_closure
-
-CLOSURE_SCHEMA = StructType(
-    [
-        StructField("ipr_id", StringType(), False),
-        StructField("superior_id", StringType(), False),
-    ]
-)
+from ahrd_spark.operators.dictionary import transitive_closure
 
 
-def interpro_closure(spark: SparkSession, entries: Iterable[tuple]) -> DataFrame:
-    """closure(ipr_id, superior_id): superior_id is a transitive ancestor
-    (via parent_id chain) or transitive container (via contains sets,
-    inverted to child->container edges) of ipr_id.
+def interpro_closure(entries: Iterable[tuple]) -> dict[str, list[str]]:
+    """ipr_id -> sorted transitive ancestors (via parent_id chain) and
+    transitive containers (via contains sets, inverted to child->container
+    edges).
 
     ``entries``: ``parse_interpro_db`` tuples ``(ipr_id, short_name, name,
-    type, parent_id, contains)``.  (a, a) appears only on a cycle; ids that
-    are only referenced (a parent or containee missing from the DB) still
-    show up."""
+    type, parent_id, contains)``.  An id is its own superior only on a
+    cycle; ids that are only referenced (a parent or containee missing from
+    the DB) still get a key; ids with no superior get none."""
     edges = []
     for ipr_id, _short, _name, _type, parent_id, contains in entries:
         if parent_id is not None:
             edges.append((ipr_id, parent_id))
         edges.extend((child, ipr_id) for child in contains or ())
-    return local_frame(spark, transitive_closure(edges), CLOSURE_SCHEMA)
+    out: dict[str, list[str]] = {}
+    for ipr_id, superior in transitive_closure(edges):
+        out.setdefault(ipr_id, []).append(superior)
+    return out
 
 
-def filter_most_informative(
-    protein_domains: DataFrame, closure: DataFrame
-) -> DataFrame:
-    """Keep (protein_acc, ipr_id) rows with no OTHER domain of the same
-    protein among ipr_id's transitive superiors.
+def filter_most_informative(entities: DataFrame, keep: str) -> DataFrame:
+    """One row per protein: ``(protein_acc, entities)``, the sorted distinct
+    ``keep`` values of the entities J9 keeps.
 
-    protein_domains: (protein_acc, ipr_id); closure: from interpro_closure.
-    The closure is dictionary-sized -> broadcast; the removal check is a
-    semi-join construction + left-anti join, both protein-keyed.
-    """
-    doomed = (
-        protein_domains.alias("d")
-        .join(F.broadcast(closure).alias("c"), F.col("d.ipr_id") == F.col("c.ipr_id"))
-        .join(
-            protein_domains.alias("o"),
-            (F.col("o.protein_acc") == F.col("d.protein_acc"))
-            & (F.col("o.ipr_id") == F.col("c.superior_id"))
-            & (F.col("o.ipr_id") != F.col("d.ipr_id")),
-            "left_semi",
-        )
-        .select(F.col("d.protein_acc").alias("protein_acc"), F.col("d.ipr_id").alias("ipr_id"))
-        .distinct()
+    ``entities``: ``protein_acc``, ``entity`` (the raw id the filter
+    compares), ``superiors`` (the id's InterPro closure, ``[]`` for a root;
+    NULL marks an entity the filter does not apply to, such as a GO term)
+    and any payload columns.  A domain is dropped when another domain of
+    the same protein is among its superiors; everything else is kept.
+    ``keep`` is a SQL expression over ``x``, a struct of every input column
+    but ``protein_acc``; the values it gives (not the raw ids) are what
+    ``array_distinct`` dedups, so two raw ids that map to one canonical id
+    come out once.
+
+    Built from SQL strings: one parse on the JVM, where Python-lambda
+    higher-order functions cost a py4j round trip per node.  The protein's
+    domain list is derived after the exchange, not shuffled beside it."""
+    cols = ", ".join(f"`{c}`" for c in entities.columns if c != "protein_acc")
+    return entities.groupBy("protein_acc").agg(
+        F.expr(f"collect_list(struct({cols})) AS e")
+    ).selectExpr(
+        "protein_acc",
+        "e",
+        "transform(filter(e, x -> x.superiors IS NOT NULL), x -> x.entity) AS d",
+    ).selectExpr(
+        "protein_acc",
+        "array_sort(array_distinct(transform(filter(e, x -> x.superiors IS NULL"
+        " OR NOT arrays_overlap(x.superiors, array_remove(d, x.entity))),"
+        f" x -> {keep}))) AS entities",
     )
-    return protein_domains.join(doomed, ["protein_acc", "ipr_id"], "left_anti")

@@ -41,10 +41,7 @@ from ahrd_spark.functions.text import (
     tokenize_expr,
 )
 from ahrd_spark.operators.go_transfer import transfer_go
-from ahrd_spark.operators.interpro_filter import (
-    filter_most_informative,
-    interpro_closure,
-)
+from ahrd_spark.operators.interpro_filter import filter_most_informative
 from ahrd_spark.operators.scoring import (
     protein_totals,
     select_winners,
@@ -53,11 +50,7 @@ from ahrd_spark.operators.scoring import (
 from ahrd_spark.sources.blast_tabular import read_seq_sim_table
 from ahrd_spark.sources.fasta import read_query_fasta, read_subject_fasta_db
 from ahrd_spark.sources.goa import read_goa
-from ahrd_spark.sources.interpro import (
-    parse_interpro_db,
-    read_interpro_db,
-    read_interpro_raw,
-)
+from ahrd_spark.sources.interpro import read_interpro_db, read_interpro_raw
 
 
 def short_accession_expr(hit_acc, regex: str):
@@ -292,7 +285,9 @@ def run_annotate(spark: SparkSession, cfg: AhrdConfig) -> DataFrame:
         out = out.join(token_set, "protein_acc", "left")
 
     if goa is not None:
-        go = transfer_go(winners, goa)
+        go = transfer_go(winners, goa).groupBy("protein_acc").agg(
+            F.array_sort(F.collect_set("go_term")).alias("go_terms")
+        )
         out = out.join(go, "protein_acc", "left")
     else:
         out = out.withColumn("go_terms", F.lit(None).cast("array<string>"))
@@ -301,22 +296,16 @@ def run_annotate(spark: SparkSession, cfg: AhrdConfig) -> DataFrame:
     )
 
     if cfg.interpro_database and cfg.interpro_result:
-        entries = parse_interpro_db(cfg.interpro_database)
-        ipr_db = read_interpro_db(spark, cfg.interpro_database, entries)
-        ipr_raw = read_interpro_raw(spark, cfg.interpro_result)
-        # J5: dictionary lookup — drop hits whose IPR id is unknown (warned
-        # in the reference) and attach names
-        ipr_hits = ipr_raw.join(
-            F.broadcast(ipr_db.select("ipr_id")), "ipr_id", "left_semi"
-        )
-        closure = interpro_closure(spark, entries)
-        kept = filter_most_informative(ipr_hits, closure)
-        kept = kept.join(F.broadcast(ipr_db.select("ipr_id", "name")), "ipr_id")
-        domains = kept.groupBy("protein_acc").agg(
-            F.array_sort(
-                F.collect_list(F.struct(F.col("ipr_id"), F.col("name")))
-            ).alias("interpro")
-        )
+        ipr_db = read_interpro_db(spark, cfg.interpro_database)
+        # J5: the inner join with the DB drops hits whose IPR id is unknown
+        # (warned in the reference) and attaches superiors and names; J9
+        # keeps each protein's most informative (ipr_id, name) pairs
+        domains = filter_most_informative(
+            read_interpro_raw(spark, cfg.interpro_result)
+            .join(F.broadcast(ipr_db.select("ipr_id", "name", "superiors")), "ipr_id")
+            .selectExpr("protein_acc", "ipr_id AS entity", "superiors", "name"),
+            "named_struct('ipr_id', x.entity, 'name', x.name)",
+        ).withColumnRenamed("entities", "interpro")
         out = out.join(domains, "protein_acc", "left")
     else:
         out = out.withColumn(

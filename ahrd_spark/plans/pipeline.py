@@ -20,22 +20,26 @@ link_score reads that checkpoint under a whole-file scan, scores groups in
 place (``pre_grouped``) and writes the one winner per protein where it was
 scored; without canonicalize, materialize projects the winners and keeps
 their layout too.  Only stages whose semantics require co-location (GO
-preference's has_go join, GO transfer's per-protein term sets, the
-InterPro filter's per-protein anti-join, materialize's entity union)
-introduce exchanges, each keyed by doc/protein hash.  Every checkpoint is
-re-read with its recorded schema (no inference job), and
-``detect_mentions``' expression tree is built once per session, so a warm
-call spends no driver time rebuilding plans.  Without GO preference, GOA
-is semi-joined to the winners' accessions only (the data-induced
-predicate of VLDB'19 "Pushing Data-Induced Predicates Through Joins").
-canonicalize treats its dictionaries as driver work: the InterPro closure
-and id list are local relations, the synonym map is a one-partition pass
-over the ontology-sized edge list, and all three reach the data-sized side
-as broadcasts, so the stage is one write job plus its AQE query stages.
-Raw InterPro lines are restricted to the batch's doc_ids (J4) before the
-filter.  The span arrays are never rewritten —
-``span_fingerprint`` equality between input and every checkpoint proves
-the per-row invariant.
+preference's has_go join, canonicalize's per-protein grouping,
+materialize's entity union) introduce exchanges, each keyed by doc/protein
+hash.  Every checkpoint is re-read with its recorded schema (no inference
+job), and ``detect_mentions``' expression tree is built once per session,
+so a warm call spends no driver time rebuilding plans.
+
+canonicalize is one per-protein pass over sources read once each.  Its
+dictionaries are driver work: the InterPro DB and each id's closed
+superiors are one local relation, and the synonym map is collected and
+union-found on the driver; both reach the data-sized side as broadcasts.
+GOA is joined to the winners only (the data-induced predicate of VLDB'19
+"Pushing Data-Induced Predicates Through Joins"); raw InterPro lines join
+the DB (J5) and are restricted to the batch's doc_ids (J4).  The union of
+GO and InterPro rows, mapped to canonical ids, is grouped by protein ONCE;
+the most-informative filter (J9) and the dedup of canonical ids are array
+expressions on each group, and the grouped output is written as it comes.
+With all three sources that is 7 jobs: the synonym collect, four broadcasts,
+the grouping's exchange and the write.  The span arrays are never
+rewritten — ``span_fingerprint`` equality between input and every
+checkpoint proves the per-row invariant.
 """
 
 from __future__ import annotations
@@ -496,8 +500,8 @@ def run_pipeline(
 
     # -- stage 2: link-score ------------------------------------------
     # GO preference needs the GOA flag of every candidate, so its GOA set
-    # is semi-joined to all mentions' accessions; otherwise GOA only feeds
-    # transfer_go, which reads it after link_score (see below)
+    # is semi-joined to all mentions' accessions; canonicalize's GO transfer
+    # reads GOA on its own (see below)
     prefer_go = cfg.prefer_reference_with_go_annos and cfg.has_go
     goa = None
     if prefer_go:
@@ -561,91 +565,82 @@ def run_pipeline(
 
     winners = _timed("link_score", run_link_stage)
 
-    # data-induced predicate (VLDB'19 "Pushing Data-Induced Predicates
-    # Through Joins"): transfer_go joins only the winners, so only their
-    # accessions need to probe GOA — one per protein instead of every
-    # mention's
-    if cfg.has_go and goa is None:
-        goa = read_goa(
-            spark,
-            cfg.gene_ontology_result,
-            cfg.reference_go_regex,
-            short_accessions=winners.select("short_acc"),
-        )
-
     # -- stage 3: canonicalize ----------------------------------------
-    # statically-empty fast path: with no GOA, no InterPro, and no synonym
-    # edges the stage is provably empty — running a checkpoint job (write +
-    # sidecar + re-read) for zero rows is pure fixed cost that also drags
-    # measured scaling (it does not shrink with parallelism)
-    has_canonical = (
-        cfg.has_go
-        or bool(cfg.interpro_database and cfg.interpro_result)
-        or synonym_edges is not None
-    )
+    # statically-empty fast path: without GOA and InterPro the stage has no
+    # entity to emit (synonyms only rename entities) — running a checkpoint
+    # job (write + sidecar + re-read) for zero rows is pure fixed cost
+    has_interpro = bool(cfg.interpro_database and cfg.interpro_result)
+    has_canonical = cfg.has_go or has_interpro
 
     def build_canonical():
+        # one row per (protein, raw entity id); superiors is the InterPro
+        # closure of a domain and NULL for a GO term, which J9 leaves alone
+        # (and which names the predicate, so no predicate string is shuffled)
         pieces = []
-        if goa is not None:
-            go = transfer_go(winners, goa).select(
-                "protein_acc",
-                F.explode("go_terms").alias("obj"),
-                F.lit("hasGOTerm").alias("pred"),
-                F.lit("go_term").alias("obj_kind"),
-            )
-            pieces.append(go)
-        if cfg.interpro_database and cfg.interpro_result:
-            # the DB is parsed once on the driver; its id list and closure
-            # reach the plan as local relations (no job to build either)
+        if cfg.has_go:
+            # data-induced predicate (VLDB'19 "Pushing Data-Induced
+            # Predicates Through Joins"): joining the winners already limits
+            # GOA to their accessions, one per protein, so it needs no
+            # semi-join or distinct of its own
+            goa = read_goa(spark, cfg.gene_ontology_result, cfg.reference_go_regex)
+            pieces.append(transfer_go(winners, goa).selectExpr(
+                "protein_acc", "go_term AS entity",
+                "CAST(NULL AS array<string>) AS superiors",
+            ))
+        if has_interpro:
+            # the DB is parsed and closed once on the driver; one broadcast
+            # of it drops unknown ids (J5) and attaches each id's superiors
             entries = parse_interpro_db(cfg.interpro_database)
-            ipr_db = read_interpro_db(spark, cfg.interpro_database, entries)
-            # J5: ids the DB knows; J4: proteins of this batch only — the
-            # raw result file may cover more proteins than the docs table
-            ipr_hits = (
+            ipr_db = read_interpro_db(
+                spark, cfg.interpro_database, entries, interpro_closure(entries)
+            )
+            # J4: proteins of this batch only — the raw result file may
+            # cover more proteins than the docs table
+            pieces.append(
                 read_interpro_raw(spark, cfg.interpro_result)
-                .join(F.broadcast(ipr_db.select("ipr_id")), "ipr_id", "left_semi")
+                .join(F.broadcast(ipr_db.select("ipr_id", "superiors")), "ipr_id")
                 .join(
                     docs.select(F.col("doc_id").alias("protein_acc")),
                     "protein_acc",
                     "left_semi",
                 )
-            )
-            kept = filter_most_informative(
-                ipr_hits, interpro_closure(spark, entries)
-            )
-            pieces.append(
-                kept.select(
-                    "protein_acc",
-                    F.col("ipr_id").alias("obj"),
-                    F.lit("hasDomain").alias("pred"),
-                    F.lit("interpro").alias("obj_kind"),
-                )
-            )
-        if not pieces:
-            return spark.createDataFrame(
-                [], "protein_acc string, obj string, pred string, obj_kind string"
+                .selectExpr("protein_acc", "ipr_id AS entity", "superiors")
             )
         ents = pieces[0]
         for p in pieces[1:]:
             ents = ents.unionByName(p)
-        if synonym_edges is None:
-            return ents.select("protein_acc", "pred", "obj", "obj_kind")
-        # the map covers the synonym graph's nodes only: an entity outside
-        # it misses the join and keeps its own id
-        cmap = canonical_map(synonym_edges)
-        return ents.join(
-            F.broadcast(cmap.withColumnRenamed("node", "obj")), "obj", "left"
-        ).select(
-            "protein_acc", "pred",
-            F.coalesce("canonical", "obj").alias("obj"),
-            "obj_kind",
+        obj = "x.entity"
+        if synonym_edges is not None:
+            # the map covers the synonym graph's nodes only: an entity
+            # outside it misses the join, keeps a NULL canonical id (nothing
+            # to shuffle) and stays itself
+            cmap = canonical_map(synonym_edges)
+            ents = ents.join(
+                F.broadcast(cmap.withColumnRenamed("node", "entity")),
+                "entity", "left",
+            )
+            obj = "coalesce(x.canonical, x.entity)"
+        # J9 sees the raw ids; the kept (pred, canonical id) pairs come out
+        # once per protein, from the grouping's one exchange
+        kept = filter_most_informative(
+            ents,
+            "named_struct('pred', IF(x.superiors IS NULL, 'hasGOTerm',"
+            f" 'hasDomain'), 'obj', {obj})",
+        )
+        return kept.selectExpr("protein_acc", "inline(entities)").selectExpr(
+            "protein_acc", "pred", "obj",
+            "IF(pred = 'hasGOTerm', 'go_term', 'interpro') AS obj_kind",
         )
 
     if has_canonical:
+        # the per-protein grouping leaves each protein's entities wholly
+        # inside one partition, contiguous: the checkpoint contract, so the
+        # output is written as it comes
         canonical = _timed("canonicalize", lambda: ckpt.run_stage(
             "canonicalize", build_canonical, key="protein_acc",
             inputs=["link_score"], num_partitions=num_partitions,
             sort_keys=["protein_acc", "pred", "obj"],
+            preserve_partitioning=True,
         ))
     else:
         canonical = None

@@ -207,6 +207,8 @@ def stream_triples(
         .option("maxFilesPerTrigger", max_files_per_trigger)
         .parquet(source_dir)
     )
+    # the synonym map is collected and union-found once, at stream start
+    cmap = None if synonym_edges is None else canonical_map(synonym_edges)
     token_w = (
         cfg.token_score_bit_score_weight,
         cfg.token_score_database_score_weight,
@@ -250,15 +252,17 @@ def stream_triples(
         triples = desc_triples(winners)
         if goa is not None:
             ents = transfer_go(winners, goa).select(
-                "protein_acc", F.explode("go_terms").alias("obj")
+                "protein_acc", F.col("go_term").alias("obj")
             )
-            cmap = canonical_map(synonym_edges, ents.select("obj"))
-            go_triples = (
-                ents.join(
+            if cmap is not None:
+                ents = ents.join(
                     F.broadcast(cmap.withColumnRenamed("node", "obj")),
                     "obj",
                     "left",
-                )
+                ).select("protein_acc", F.coalesce("canonical", "obj").alias("obj"))
+            # after the mapping: two synonyms of one protein give one triple
+            go_triples = (
+                ents.distinct()
                 .join(
                     winners.select("protein_acc", "db", "hit_acc"),
                     "protein_acc",
@@ -267,7 +271,7 @@ def stream_triples(
                 .select(
                     F.col("protein_acc").alias("subj"),
                     F.lit("hasGOTerm").alias("pred"),
-                    F.coalesce("canonical", "obj").alias("obj"),
+                    "obj",
                     F.lit("go_term").alias("obj_kind"),
                     F.lit(None).cast("double").alias("score"),
                     F.col("db").alias("src_db"),

@@ -46,7 +46,7 @@ def test_closure_loops_release_their_caches(spark):
     relations, so repeated calls retain no persisted RDD at all."""
     import gc
 
-    from ahrd_spark.operators.interpro_filter import interpro_closure
+    from ahrd_spark.sources.interpro import read_interpro_db
 
     edges = spark.createDataFrame(
         [("GO:a", "GO:b"), ("GO:b", "GO:c")], "child string, parent string"
@@ -64,11 +64,11 @@ def test_closure_loops_release_their_caches(spark):
 
     # warm one call of each, drop results
     go_dag_closure(edges).count()
-    interpro_closure(spark, entries).count()
+    read_interpro_db(spark, None, entries).count()
     base = retained()
     for _ in range(3):
         go_dag_closure(edges).count()
-        interpro_closure(spark, entries).count()
+        read_interpro_db(spark, None, entries).count()
     assert retained() <= base
 
 
